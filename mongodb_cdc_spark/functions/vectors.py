@@ -1,18 +1,23 @@
 """Vector math over ArrayType(Float) embedding columns — pure expression
 builders (no UDFs; everything stays JVM-side).
 
-Determinism across engines: a dot product written as a fold/aggregate is
-engine-ordered, and DuckDB's ``list_cosine_similarity`` may accumulate in
-float32 — so for exact-oracle paths we UNROLL the dot product into a
-left-associative ``a[1]*b[1] + a[2]*b[2] + ...`` chain. Both engines then
-parse an identical expression tree and execute the identical sequence of
-IEEE-754 double ops: bit-exact agreement, no tolerance needed. 64 terms
-inline is well within codegen limits and compiles to a straight-line loop
-body.
+Determinism across engines: every exact-oracle cosine runs the same
+left-to-right sequence of IEEE-754 double ops in both engines, so the
+results agree bit for bit with no tolerance.
 
-For non-oracle hot paths (ANN bucketing at scale) the higher-order
-``aggregate(zip_with(...))`` form is equivalent and shorter; both are
-provided.
+* **DuckDB (the oracle).** The dot product is UNROLLED into a
+  left-associative ``a[1]*b[1] + a[2]*b[2] + ...`` chain. DuckDB's
+  ``list_cosine_similarity`` may accumulate in float32, so the chain is
+  the reference the hashes are checked against.
+* **Spark.** The same chain is written as one higher-order fold,
+  ``aggregate(zip_with(a, b, *), -0.0, +)``: the products are formed in
+  index order and summed from the left, exactly like the chain. The seed
+  is ``-0.0``, the exact additive identity (``-0.0 + x == x`` for every
+  ``x``, signed zeros included); a ``0.0`` seed would turn an all-``-0.0``
+  dot into ``+0.0``. An unrolled chain of ~200 ops fused into a join's
+  generated code fails janino's method limits; the fold instead falls
+  back to interpreted evaluation on its own, inside an otherwise
+  compiled stage, so whole-stage codegen never has to be switched off.
 """
 
 from __future__ import annotations
@@ -33,7 +38,18 @@ def _ix(arr: str, i: int, dialect: str) -> str:
 
 
 def dot_unrolled_sql(a: str, b: str, dim: int = DIM, dialect: str = "spark") -> str:
-    """Left-associative unrolled dot product for the given SQL dialect."""
+    """Left-associative dot product for the given SQL dialect: an
+    unrolled chain for DuckDB, the bit-identical ``-0.0``-seeded fold for
+    Spark (module docstring). ``dim < DIM`` dots the first ``dim``
+    components only."""
+    if dialect == "spark":
+        if dim < DIM:
+            a, b = f"slice({a}, 1, {dim})", f"slice({b}, 1, {dim})"
+        return (
+            f"aggregate(zip_with({a}, {b}, (_va, _vb) -> "
+            "CAST(_va AS DOUBLE) * CAST(_vb AS DOUBLE)), "
+            "CAST('-0.0' AS DOUBLE), (_acc, _p) -> _acc + _p)"
+        )
     terms = " + ".join(
         f"CAST({_ix(a, i, dialect)} AS DOUBLE) * CAST({_ix(b, i, dialect)} AS DOUBLE)"
         for i in range(1, dim + 1)
@@ -42,7 +58,7 @@ def dot_unrolled_sql(a: str, b: str, dim: int = DIM, dialect: str = "spark") -> 
 
 
 def cosine_unrolled_sql(a: str, b: str, dim: int = DIM, dialect: str = "spark") -> str:
-    """Exact-parity cosine similarity: unrolled dot / (sqrt · sqrt).
+    """Exact-parity cosine similarity: dot / (sqrt · sqrt).
     sqrt and divide are correctly-rounded IEEE ops — deterministic."""
     d = dialect
     return (
@@ -51,18 +67,15 @@ def cosine_unrolled_sql(a: str, b: str, dim: int = DIM, dialect: str = "spark") 
     )
 
 
-def dot(a: Column | str, b: Column | str) -> Column:
-    """Fold-style dot product for non-oracle paths:
-    ``aggregate(zip_with(a, b, *), 0.0, +)`` — sequential fold, JVM-side."""
-    a = F.col(a) if isinstance(a, str) else a
-    b = F.col(b) if isinstance(b, str) else b
-    prods = F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))
-    return F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
+def dot(a: str, b: str) -> Column:
+    """Column form of the Spark :func:`dot_unrolled_sql` fold over two
+    array columns named ``a`` and ``b``."""
+    return F.expr(dot_unrolled_sql(a, b))
 
 
-def cosine(a: Column | str, b: Column | str) -> Column:
-    """Fold-style cosine for non-oracle paths."""
-    return dot(a, b) / (F.sqrt(dot(a, a)) * F.sqrt(dot(b, b)))
+def cosine(a: str, b: str) -> Column:
+    """Column form of the Spark :func:`cosine_unrolled_sql`."""
+    return F.expr(cosine_unrolled_sql(a, b))
 
 
 # ------------------------------------------- random-hyperplane LSH ----
@@ -96,20 +109,20 @@ def lsh_bit_sum_sql(bit: int, arr: str, dim: int = DIM, dialect: str = "spark") 
 
 # ---------------------------------------- Arrow-vectorized projections ----
 #
-# The multi-centroid projection pass (semantic dedup's s0..s3) unrolls to
-# 4 x (3 x 64)-term expression trees in one projection — past janino's
-# 64 KB method limit, so Spark silently falls back to INTERPRETED
-# per-row evaluation (observed in the r5 judge gate run). At 100 TB an
+# As SQL, the multi-centroid projection pass (semantic dedup's s0..s3)
+# is 4 x 3 dot products per row in one projection, and Spark evaluates
+# them INTERPRETED per row (the unrolled chain overflowed janino's 64 KB
+# method limit; the fold never compiles). At 100 TB an
 # interpreted expression tree on the embedding tier is real money; the
 # Arrow path below is the measured fix (100x replica, 200 k vectors,
 # steady state: 2.80 s interpreted SQL -> 1.10 s Arrow NumPy = 2.5x).
 #
 # BIT-EXACTNESS CONTRACT (what lets an oracle path use a Python UDF at
-# all): the unrolled SQL chain `a1*b1 + a2*b2 + ...` parses
-# left-associative, so both engines execute the identical SEQUENCE of
-# IEEE-754 double ops. The NumPy twin reproduces that sequence exactly —
-# one vectorized multiply-add per DIMENSION, accumulated in order across
-# a row batch (never np.dot / einsum, whose SIMD blocking reorders the
+# all): the DuckDB chain `a1*b1 + a2*b2 + ...` parses left-associative
+# and the Spark fold sums in the same order, so both engines execute the
+# identical SEQUENCE of IEEE-754 double ops. The NumPy twin reproduces
+# that sequence exactly — one vectorized multiply-add per DIMENSION,
+# accumulated in order across a row batch (never np.dot / einsum, whose SIMD blocking reorders the
 # sum) — float32 -> float64 casts are exact, sqrt and divide are
 # correctly rounded in both engines. Verified: 0 bit mismatches across
 # all 2000 x 4 sf0.1 cosines vs the unrolled SQL, and the consuming
@@ -158,34 +171,3 @@ def centroid_cosines_udf(centroids):
         return pd.Series(list(np.stack(cols, axis=1)))
 
     return project
-
-
-def pair_cosine_udf():
-    """Arrow pandas UDF: cosine of two embedding COLUMNS (pair frames —
-    both sides vary per row, unlike :func:`centroid_cosines_udf`'s
-    closure-captured centroids). Same bit-exactness contract as above:
-    one vectorized multiply-add per dimension, accumulated left-to-right,
-    so every row reproduces :func:`cosine_unrolled_sql`'s IEEE op
-    sequence exactly."""
-    from pyspark.sql.functions import pandas_udf
-    from pyspark.sql.types import DoubleType
-
-    def _seq_pair_dot_np(A, B):
-        acc = A[:, 0] * B[:, 0]
-        for d in range(1, A.shape[1]):
-            acc = acc + A[:, d] * B[:, d]
-        return acc
-
-    @pandas_udf(DoubleType())
-    def pcos(ea: pd.Series, eb: pd.Series) -> pd.Series:
-        A = np.stack(ea.to_numpy()).astype(np.float64)
-        B = np.stack(eb.to_numpy()).astype(np.float64)
-        num = _seq_pair_dot_np(A, B)
-        # sqrt(na) * sqrt(nb), NOT sqrt(na*nb): must reproduce
-        # cosine_unrolled_sql's op sequence exactly
-        return pd.Series(
-            num
-            / (np.sqrt(_seq_norm_sq_np(A)) * np.sqrt(_seq_norm_sq_np(B)))
-        )
-
-    return pcos

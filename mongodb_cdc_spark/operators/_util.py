@@ -110,34 +110,6 @@ def _shared_pool():
         return _pool
 
 
-from contextlib import contextmanager as _contextmanager
-
-
-@_contextmanager
-def no_codegen(spark):
-    """Scope whole-stage codegen OFF around actions whose hot fragment
-    is a giant unrolled-cosine join/aggregate (the bit-exact 32-dim
-    cosine expands to ~100 chained IEEE ops; fused into a join consume
-    method it exceeds janino's per-method limits, so compilation FAILS
-    and Spark falls back to interpreted eval anyway — but only after
-    PAYING the doomed compile, ~0.5 s per action, re-paid every
-    micro-batch because failures are not cached). Skipping the attempt
-    is strictly faster for these plans (measured 1.5 s -> 1.05 s per
-    gate invocation at sf0.1) and changes nothing about the result:
-    the interpreted evaluator runs the identical expression tree.
-
-    Session-scoped conf: any job planned inside the scope (including
-    overlapped run_parallel thunks of the same batch phase, which are
-    all batch-sized and codegen-insensitive) plans without whole-stage
-    codegen; the previous value is restored on exit."""
-    prev = spark.conf.get("spark.sql.codegen.wholeStage", "true")
-    spark.conf.set("spark.sql.codegen.wholeStage", "false")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.codegen.wholeStage", prev)
-
-
 def run_parallel(*thunks):
     """Run independent Spark actions concurrently from driver threads
     (optimization guide §2.6 "overlap independent jobs"). Actions are

@@ -52,7 +52,6 @@ from mongodb_cdc_spark.io import load_table
 from mongodb_cdc_spark.registry import query
 from mongodb_cdc_spark.operators._util import (
     new_stage,
-    no_codegen,
     publish_store,
     run_parallel,
 )
@@ -547,7 +546,7 @@ def _sem_dropped(ranked: DataFrame) -> DataFrame:
     AND MEASURED on the way here: (a) the unrolled cosine fused into
     the block join's output stage — blows janino's 64 KB doConsume
     limit, whole join drops to interpreted (2.99 -> 5.5 s at sf0.1);
-    (b) `pair_cosine_udf` on the fused join — keeps codegen but streams
+    (b) an Arrow pair-cosine UDF on the fused join — keeps codegen but streams
     BOTH arrays of every pair through Arrow (~N*W*K x 550 B), measured
     525.6 s at 1000x, WORSE than the old band. The superblock scorer
     moves arrays at N(1 + W/B) scale only (~0.8% replication at
@@ -3284,16 +3283,13 @@ def corpus_gate_batch_applier(
                 F.broadcast(bdf.select("doc_id")),
                 F.col("doc_id") == F.col("vec_id"),
             ).select("vec_id", "embedding")
-            # no_codegen: the verify join's unrolled cosine fails
-            # whole-stage compilation every batch before interpreting
-            with no_codegen(s):
-                return (
-                    semantic_gate_verdicts(
-                        wave_emb, sem_base_narrow, sem_base_emb, sem_project
-                    )
-                    .withColumnRenamed("vec_id", "doc_id")
-                    .localCheckpoint(eager=True)
+            return (
+                semantic_gate_verdicts(
+                    wave_emb, sem_base_narrow, sem_base_emb, sem_project
                 )
+                .withColumnRenamed("vec_id", "doc_id")
+                .localCheckpoint(eager=True)
+            )
 
         _, txt_v, media, sem_v = run_parallel(t_url, t_txt, t_media, t_sem)
         url_v = s.read.parquet(f"{url_target}/batch={batch_id}")
@@ -3734,15 +3730,12 @@ def semantic_gate_batch_applier(
     )
 
     def apply_batch(bdf: DataFrame, batch_id: int) -> None:
-        # no_codegen: the verify join's unrolled cosine fails whole-stage
-        # compilation every batch before interpreting — skip the attempt
-        with no_codegen(bdf.sparkSession):
-            semantic_gate_verdicts(
-                bdf.filter(F.col("vec_id") > cut).select("vec_id", "embedding"),
-                base_narrow,
-                base_emb,
-                project,
-            ).write.mode("overwrite").parquet(f"{target}/batch={batch_id}")
+        semantic_gate_verdicts(
+            bdf.filter(F.col("vec_id") > cut).select("vec_id", "embedding"),
+            base_narrow,
+            base_emb,
+            project,
+        ).write.mode("overwrite").parquet(f"{target}/batch={batch_id}")
 
     return apply_batch
 
@@ -4749,17 +4742,12 @@ def corpus_gate_xwave_applier(
         # CONCURRENTLY (each depends only on phase-A frames), so the
         # final verdict write joins checkpointed batch-sized frames
         # instead of recomputing every gate chain inside one action
-        # no_codegen: the semantic verify join and the in-batch all-pairs
-        # arm both fuse the unrolled cosine into join codegen that fails
-        # janino every batch before interpreting; the sibling frames in
-        # this phase are batch-sized and codegen-insensitive
-        with no_codegen(s):
-            near_b, media, sem_v, sem_inb = run_parallel(
-                lambda: near_b.localCheckpoint(eager=True),
-                lambda: media.localCheckpoint(eager=True),
-                t_sem_v,
-                lambda: sem_inb.localCheckpoint(eager=True),
-            )
+        near_b, media, sem_v, sem_inb = run_parallel(
+            lambda: near_b.localCheckpoint(eager=True),
+            lambda: media.localCheckpoint(eager=True),
+            t_sem_v,
+            lambda: sem_inb.localCheckpoint(eager=True),
+        )
         out = (
             bdf.select("doc_id")
             .join(url_v, "doc_id")

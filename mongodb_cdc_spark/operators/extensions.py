@@ -2672,7 +2672,6 @@ def ext_bitext_mine_from_store(
     from pyspark.sql.window import Window
 
     from mongodb_cdc_spark.functions.vectors import centroid_cosines_udf
-    from mongodb_cdc_spark.operators._util import no_codegen
 
     d = load_table(spark, sf_dir, "documents")
     e = load_table(spark, sf_dir, "embeddings")
@@ -2716,19 +2715,16 @@ def ext_bitext_mine_from_store(
             "bucket",
         )
     )
-    # no_codegen: the bucket join's unrolled cosine fails whole-stage
-    # compilation before interpreting — skip the doomed compile
-    with no_codegen(spark):
-        scored = (
-            pasg.join(en_b, "bucket")
-            .select(
-                "probe_id",
-                "probe_lang",
-                "cand_id",
-                F.expr(cosine_unrolled_sql("pemb", "cemb")).alias("c"),
-            )
-            .localCheckpoint(eager=True)
+    scored = (
+        pasg.join(en_b, "bucket")
+        .select(
+            "probe_id",
+            "probe_lang",
+            "cand_id",
+            F.expr(cosine_unrolled_sql("pemb", "cemb")).alias("c"),
         )
+        .localCheckpoint(eager=True)
+    )
     ranked = scored.withColumn(
         "rk",
         F.row_number().over(
@@ -2945,7 +2941,7 @@ def ext_bitext_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     same operands, the same (cs DESC, cand_id ASC) total order, the
     same e6 floors — bit-exact vs the unchanged oracle."""
     from mongodb_cdc_spark.functions.vectors import centroid_cosines_udf
-    from mongodb_cdc_spark.operators._util import no_codegen, run_parallel
+    from mongodb_cdc_spark.operators._util import run_parallel
 
     d = load_table(spark, sf_dir, "documents")
     e = load_table(spark, sf_dir, "embeddings")
@@ -2969,9 +2965,7 @@ def ext_bitext_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     # independent setup arms + independent truth/bucketed arms overlap
-    # (guide 2.6); the truth/bucketed arms' unrolled-cosine aggregates
-    # fail whole-stage compilation before interpreting, so the doomed
-    # compile is skipped (no_codegen) — results unchanged
+    # (guide 2.6)
     en, pasg = run_parallel(
         lambda: with_bucket(
             d.filter(F.col("lang") == "en").select("doc_id")
@@ -3043,8 +3037,7 @@ def ext_bitext_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             .localCheckpoint(eager=True)
         )
 
-    with no_codegen(spark):
-        bru, bkt = run_parallel(t_bru, t_bkt)
+    bru, bkt = run_parallel(t_bru, t_bkt)
     both = bru.join(bkt, "probe_id")
     n_probes = bru.agg(F.count(F.lit(1)).cast("bigint").alias("n_probes"))
     n_bucketed = bkt.agg(
@@ -3164,7 +3157,7 @@ def ext_bitext_multiprobe_recall(
     from pyspark.sql.window import Window
 
     from mongodb_cdc_spark.functions.vectors import centroid_cosines_udf
-    from mongodb_cdc_spark.operators._util import no_codegen, run_parallel
+    from mongodb_cdc_spark.operators._util import run_parallel
 
     d = load_table(spark, sf_dir, "documents")
     e = load_table(spark, sf_dir, "embeddings")
@@ -3287,8 +3280,7 @@ def ext_bitext_multiprobe_recall(
             .localCheckpoint(eager=True)
         )
 
-    with no_codegen(spark):
-        bru, bkt = run_parallel(t_bru, t_bkt)
+    bru, bkt = run_parallel(t_bru, t_bkt)
     n_probes = bru.agg(
         F.count(F.lit(1)).cast("bigint").alias("n_probes")
     )

@@ -721,13 +721,10 @@ def test_text_gate_never_shuffles_state(spark, sf_dir):
     assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
 
 
-def test_semantic_gate_never_shuffles_embeddings(spark, sf_dir):
-    """The semantic gate's verify stage in plan form: the base
-    embedding table is corpus-cardinality and must reach the batch
-    only via the candidate-bid semi-prune + broadcast of the pruned
-    slice — a bare bid equi-join would shuffle every base embedding
-    per micro-batch. Drives the gate's OWN read path
-    (`semantic_gate_verdicts`) on a real wave slice."""
+def _semantic_gate_probe(spark, sf_dir):
+    """The semantic gate's own per-batch read path
+    (`semantic_gate_verdicts`) over the real wave slice; returns
+    (verdicts frame, wave row count)."""
     from mongodb_cdc_spark.functions.vectors import centroid_cosines_udf
     from mongodb_cdc_spark.operators.curation import (
         _SEM_K,
@@ -759,6 +756,17 @@ def test_semantic_gate_never_shuffles_embeddings(spark, sf_dir):
     probe = semantic_gate_verdicts(
         wave, base_narrow, base_emb, centroid_cosines_udf(cents)
     )
+    return probe, wave.count()
+
+
+def test_semantic_gate_never_shuffles_embeddings(spark, sf_dir):
+    """The semantic gate's verify stage in plan form: the base
+    embedding table is corpus-cardinality and must reach the batch
+    only via the candidate-bid semi-prune + broadcast of the pruned
+    slice — a bare bid equi-join would shuffle every base embedding
+    per micro-batch. Drives the gate's OWN read path
+    (`semantic_gate_verdicts`) on a real wave slice."""
+    probe, _ = _semantic_gate_probe(spark, sf_dir)
     plan = probe._sc._jvm.PythonSQLUtils.explainString(
         probe._jdf.queryExecution(), "simple"
     )
@@ -767,6 +775,23 @@ def test_semantic_gate_never_shuffles_embeddings(spark, sf_dir):
     # scan); the embedding table itself must only appear under
     # broadcast joins
     assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
+
+
+def test_semantic_gate_compiles_without_codegen_fallback(spark, sf_dir):
+    """The exact-cosine verify join must survive whole-stage codegen
+    with no session conf toggled around it. With
+    `spark.sql.codegen.fallback=false` a failed janino compile raises
+    instead of silently dropping to interpreted evaluation, so this
+    runs the gate's per-batch action exactly as a micro-batch would
+    and proves every generated stage compiles."""
+    probe, n_wave = _semantic_gate_probe(spark, sf_dir)
+    prev = spark.conf.get("spark.sql.codegen.fallback")
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try:
+        rows = probe.collect()
+    finally:
+        spark.conf.set("spark.sql.codegen.fallback", prev)
+    assert len(rows) == n_wave > 0
 
 
 def test_url_gate_seen_read_set_is_bounded(spark, sf_dir, tmp_path):

@@ -12,10 +12,13 @@ that a one-liner in the dev loop:
 
 Mechanics: each registered callable's ``__code__.co_filename`` names the
 module that implements it; any key whose file appears in
-``git diff --name-only <ref>`` (plus registry.py itself, which would mean
-oracle edits — those are caught by the full sim instead) is re-run through
-``driver_gate_sim.py --hostile`` at sf0.01 and sf0.1. Exit non-zero on any
-failure. No changed operator files -> exit 0 immediately.
+``git diff --name-only <ref>`` is re-run through
+``driver_gate_sim.py --hostile`` at sf0.01 and sf0.1. A changed package
+file that implements no key (a shared helper such as
+``functions/vectors.py`` or ``operators/_util.py``, or registry.py, whose
+edits can reach any oracle) can move any key, so it runs
+``tools/gate_full_sweep.sh`` at each SF instead. Exit non-zero on any
+failure. No changed package files -> exit 0 immediately.
 """
 
 from __future__ import annotations
@@ -40,19 +43,20 @@ def changed_files(ref: str) -> set[str]:
     return {ln.strip() for ln in (out + staged).splitlines() if ln.strip()}
 
 
-def keys_for_files(files: set[str]) -> list[str]:
+def keys_by_file(files: set[str]) -> dict[str, list[str]]:
+    """Changed file -> the registered keys it implements."""
     from mongodb_cdc_spark.registry import QUERIES, load_all_operators
 
     load_all_operators()
-    abs_changed = {os.path.join(REPO, f) for f in files}
-    hit = []
+    by_abs = {os.path.join(REPO, f): f for f in files}
+    hit: dict[str, list[str]] = {f: [] for f in files}
     for key, fn in QUERIES.items():
         target = fn
         while hasattr(target, "__wrapped__"):
             target = target.__wrapped__
         src = getattr(getattr(target, "__code__", None), "co_filename", "")
-        if src in abs_changed:
-            hit.append(key)
+        if src in by_abs:
+            hit[by_abs[src]].append(key)
     return hit
 
 
@@ -69,24 +73,25 @@ def main() -> int:
     if not op_files:
         print(f"no package files changed vs {ref}; nothing to gate")
         return 0
-    keys = keys_for_files(op_files)
-    if "mongodb_cdc_spark/registry.py" in op_files:
-        print("note: registry.py changed (oracle edits?) — keys implemented "
-              "there are not auto-detected; run the full gate sim if oracles "
-              "were touched")
-    if not keys:
-        print(f"changed package files {sorted(op_files)} implement no "
-              "registered keys; nothing to gate")
-        return 0
-    print(f"gating {len(keys)} changed key(s) vs {ref}: {keys}")
+    by_file = keys_by_file(op_files)
+    shared = sorted(
+        f for f, keys in by_file.items()
+        if not keys or f == "mongodb_cdc_spark/registry.py"
+    )
+    if shared:
+        print(f"changed package files {shared} implement no registered key "
+              f"and can move any key; running the full sweep vs {ref}")
+        sweep = os.path.join(REPO, "tools", "gate_full_sweep.sh")
+        cmds = [[sweep, sf] for sf in sfs]
+    else:
+        keys = sorted(k for ks in by_file.values() for k in ks)
+        print(f"gating {len(keys)} changed key(s) vs {ref}: {keys}")
+        sim = os.path.join(REPO, "tools", "driver_gate_sim.py")
+        cmds = [[sys.executable, sim, sf, "--hostile", "--keys", ",".join(keys)]
+                for sf in sfs]
     rc = 0
-    for sf in sfs:
-        r = subprocess.run(
-            [sys.executable, os.path.join(REPO, "tools", "driver_gate_sim.py"),
-             sf, "--hostile", "--keys", ",".join(keys)],
-            cwd=REPO,
-        )
-        rc = rc or r.returncode
+    for cmd in cmds:
+        rc = subprocess.run(cmd, cwd=REPO).returncode or rc
     return rc
 
 
